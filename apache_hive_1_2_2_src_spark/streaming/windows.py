@@ -1240,6 +1240,13 @@ def compact_partitioned_store(
     directory swap), preserving the ``part_col=`` layout so probe-side
     partition pruning is untouched. Returns (files_before, files_after).
 
+    A compacted store is terminal: it takes no further ``epoch=``
+    appends. The rewrite partitions by ``part_col`` alone, so the
+    ``epoch=N`` directory level of the drain stores becomes a plain
+    column. A later ``epoch=N`` append would mix ``part_col=V`` and
+    ``epoch=N/part_col=V`` layouts and break partition discovery. So
+    compact a drain's stores only after its last drop.
+
     All filesystem metadata ops go through the Hadoop FS API (r18 —
     VERDICT r17 item 1), so the compactor runs unchanged against
     file://, hdfs://, and s3a:// stores; file counting is ONE

@@ -1,9 +1,10 @@
 """Isolated per-query timing, bench.py methodology (warm session, count()
-action, sequential). Usage: python tools/minibench.py q1 q2 ... [--reps=N]
-(``--reps N`` also accepted). Prints one JSON line {name: sec}."""
+action, sequential). Usage: python tools/minibench.py q1 q2 ... [--reps N]
+(``--reps=N`` also accepted). Prints one JSON line {name: sec}."""
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -16,41 +17,27 @@ from apache_hive_1_2_2_src_spark.session import get_session
 
 
 def main() -> int:
-    argv = sys.argv[1:]
-    args: list[str] = []
-    reps = 1
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--reps"):
-            # ADVICE r19: accept both --reps=N and --reps N
-            if "=" in a:
-                reps = int(a.split("=", 1)[1])
-            else:
-                i += 1
-                reps = int(argv[i])
-        elif a.startswith("--"):
-            raise SystemExit(f"unknown option: {a}")
-        else:
-            args.append(a)
-        i += 1
+    ap = argparse.ArgumentParser(description="Isolated per-query timing.")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--reps", type=int, default=1)
+    opts = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reg = load_all()
-    unknown = [n for n in args if n not in reg]
+    unknown = [n for n in opts.queries if n not in reg]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
     spark = get_session("minibench")
     # warmup: flagship query, absorbs session/scan/codegen startup
     reg["q1_pricing_summary"].build(spark, sf_dir).count()
     out = {}
-    for name in args:
+    for name in opts.queries:
         vals = []
-        for _ in range(reps):
+        for _ in range(opts.reps):
             spark.sparkContext.setJobDescription(f"minibench:{name}")
             t0 = time.time()
             reg[name].build(spark, sf_dir).count()
             vals.append(round(time.time() - t0, 3))
-        out[name] = vals[0] if reps == 1 else vals
+        out[name] = vals[0] if opts.reps == 1 else vals
     print(json.dumps(out))
     return 0
 

@@ -1,11 +1,12 @@
-"""Per-query job/stage profiler (r20): run one registered query with the
+"""Per-query job/stage profiler: run one registered query with the
 Spark event log enabled, then print per-job durations, inter-job driver
 gaps, and single-task / long stages.
 
 Usage: python tools/profile_query.py <query> [<query> ...]
 
-The session is created with spark.eventLog.enabled=true pointing at a
-fresh /tmp dir; logs are the zstd event-log dirs Spark 4 writes
+The session is the engine's own ``get_session()``; the event-log confs are
+layered on through PYSPARK_SUBMIT_ARGS before the JVM starts, pointing at a
+fresh temp dir. Logs are the zstd event-log dirs Spark 4 writes
 (eventlog_v2_*/events_*.zstd). Prints one summary block per query:
   jobs=N  wall=S  sum(job_dur)=S  sum(gaps)=S
   top jobs by duration, top gaps, stages with 1 task and >0.5s duration.
@@ -24,6 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from apache_hive_1_2_2_src_spark.registry import load_all  # noqa: E402
+from apache_hive_1_2_2_src_spark.session import get_session  # noqa: E402
 
 
 def read_events(evt_dir: str) -> list[dict]:
@@ -106,26 +108,10 @@ def main() -> int:
     evt_dir = tempfile.mkdtemp(prefix="sparkevt_")
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    from apache_hive_1_2_2_src_spark.session import default_parallelism
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{default_parallelism()}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evt_dir)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(default_parallelism()))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={evt_dir} pyspark-shell"
     )
+    spark = get_session("profile")
     reg = load_all()
     reg["q1_pricing_summary"].build(spark, sf_dir).count()  # warmup
     windows = []
